@@ -100,43 +100,25 @@ final class GStream[T](val ds: Dataset[(Long, T)]) {
     * every record carries the operator-level watermark in force when it
     * arrived.
     *
-    * The prefix max is DISTRIBUTED (the q44 ntile pattern): range-
-    * partition on `seq`, running max within each partition, then add
-    * each partition's carry-in — the max over all earlier partitions,
-    * computed from a ≤#partitions-row aggregate (bounded by cluster
-    * size, not data; the only unpartitioned window runs over that tiny
-    * frame). One plan, so the range exchange is computed once and
-    * reused across the per-partition and carry subtrees. Output is
+    * The prefix max runs through [[graft.ops.PrefixSum.prefixMax]]
+    * over `seq` with no part columns, so it plans as one
+    * `PrefixSumExec`: one range exchange on `seq`, a pass-1 job over
+    * the same shuffle files that collects one max per partition (the
+    * carry frame is #partitions entries, whatever the data size), and
+    * a sorted streaming pass that runs inside the consuming stage's
+    * tasks (nothing else is materialized). Output is
     * bit-identical to the sequential fold over arrival order.
     */
   def assignTimestamps(f: T => (Long, Long))(implicit e: Encoder[Stamped[T]]): Dataset[Stamped[T]] = {
-    import org.apache.spark.sql.expressions.Window
-    // named imports: the functions._ wildcard would pull in functions.e
+    // a named import: the functions._ wildcard would pull in functions.e
     // (Euler's number), shadowing the implicit encoder parameter
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, greatest, lit,
-      max, spark_partition_id}
+    import org.apache.spark.sql.functions.col
     val stamped = ds.map { case (s, v) =>
       val (ts, wm) = f(v)
       Stamped(s, ts, wm, v)
     }
-    // the conf value may be non-numeric on some platforms (e.g. "auto")
-    val nParts = ds.sparkSession.conf.get("spark.sql.shuffle.partitions").toIntOption
-      .getOrElse(ds.sparkSession.sparkContext.defaultParallelism)
-    val parted = stamped.toDF()
-      .repartitionByRange(nParts, col("seq"))
-      .withColumn("__pid", spark_partition_id())
-    val wLocal = Window.partitionBy(col("__pid")).orderBy(col("seq"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wCarry = Window.orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = parted.groupBy(col("__pid")).agg(max(col("wm")).as("__pmax"))
-      .withColumn("__carry", max(col("__pmax")).over(wCarry))
-      .select(col("__pid"), col("__carry"))
-    parted
-      .withColumn("__lmax", max(col("wm")).over(wLocal))
-      .join(broadcast(carry), "__pid")
-      .withColumn("wm", greatest(col("__lmax"), coalesce(col("__carry"), lit(Long.MinValue))))
-      .select(col("seq"), col("ts"), col("wm"), col("value"))
+    graft.ops.PrefixSum.prefixMax(stamped.toDF(), Nil, Seq(col("seq")), col("wm"))
+      .select(col("seq"), col("ts"), col("cum").as("wm"), col("value"))
       .as[Stamped[T]](e)
   }
 

@@ -16,13 +16,24 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * [[graft.plans.PrefixSumExec]]: ONE range exchange on (part ++
   * order), a tiny per-partition-totals job over the same shuffle
   * files, and a sorted streaming pass that adds the broadcast carry.
-  * The carry frame is one row per (physical partition, part) —
-  * cluster-sized, not data-sized, because range partitioning keeps
-  * each partition to a contiguous key range. The round-14..17 shape
+  * The carry frame is one row per (physical partition, part), at most
+  * #partitions + #parts rows because range partitioning keeps each
+  * partition to a contiguous key range. The round-14..17 shape
   * (repartitionByRange → localCheckpoint → window + carry aggregate +
   * broadcast join) paid a full second materialization of the working
   * frame to executor local storage and truncated lineage; the operator
   * materializes nothing beyond the exchange itself.
+  *
+  * Hard contract — the carry frame is driver-sized: pass 1 collects one
+  * entry per (physical partition, part key) to the driver, and the
+  * operator throws once that count exceeds
+  * [[graft.plans.PrefixSumExec.MaxCarryEntries]] (a constant, not a
+  * conf), naming the count and the part columns. An empty or categorical
+  * `part` stays within #partitions + #keys at any scale. A `part` whose
+  * cardinality grows with the data (q247's graph node ids) costs about
+  * one entry per key and fails once the data outgrows the limit; past
+  * that, run it as a keyed sort (`KeyedGStream.mapState`'s shape) or a
+  * window instead.
   */
 object PrefixSum {
 
@@ -126,6 +137,18 @@ object PrefixSum {
       df: DataFrame, part: Seq[String], order: Seq[Column],
       value: Column): DataFrame =
     fused(df, part, order, value, rank = true, totalName = None)
+
+  /** Appends `cum`: the running MAX of `value` over the rows up to and
+    * INCLUDING the current one (ROWS UNBOUNDED PRECEDING .. CURRENT ROW)
+    * of `order` within `part` — NULL until the group's first non-null
+    * value (the event-time watermarker's shape: `GStream
+    * .assignTimestamps` makes each record's watermark the max seen so
+    * far in arrival order).
+    */
+  def prefixMax(
+      df: DataFrame, part: Seq[String], order: Seq[Column],
+      value: Column): DataFrame =
+    fused(df, part, order, value, rank = false, totalName = None, isMax = true)
 
   /** Appends `cum`: the running MAX of `value` over the STRICTLY
     * PRECEDING rows (ROWS UNBOUNDED PRECEDING .. -1) of `order` within

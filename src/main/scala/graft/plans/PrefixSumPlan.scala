@@ -10,10 +10,11 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{
   Distribution, OrderedDistribution, Partitioning}
 import org.apache.spark.sql.execution.{
-  SortPrefixUtils, SparkPlan, SparkStrategy, UnaryExecNode,
+  SQLExecution, SortPrefixUtils, SparkPlan, SparkStrategy, UnaryExecNode,
   UnsafeExternalRowSorter}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types.{LongType, StructType}
-import org.apache.spark.SparkEnv
+import org.apache.spark.{SparkEnv, TaskContext}
 
 /** Single-pass distributed prefix sum (the `ops.PrefixSum` kernel).
   *
@@ -36,8 +37,12 @@ import org.apache.spark.SparkEnv
   *     (sum v, any-non-null, count) per part key and collect. Because
   *     the layout is range-partitioned on (part ++ order), each
   *     partition holds a contiguous key range, so the collected frame
-  *     has at most #partitions + #parts entries — cluster-sized at any
-  *     data scale, the same bound the old broadcast carry frame had.
+  *     has at most #partitions + #parts entries — the same bound the
+  *     old broadcast carry frame had; cluster-sized at any data scale
+  *     when the part is, data-sized when the part is (q247's node ids).
+  *     More than [[PrefixSumExec.MaxCarryEntries]] entries (in one
+  *     partition, or collected in all) fails the query: the bound is a
+  *     contract, checked rather than assumed.
   *   driver: per (partition, key), the carry = totals of the SAME key
   *     in PRECEDING partitions; per key, the global total. Broadcast.
   *   pass 2: per partition, sort by (part ++ order) with the standard
@@ -60,6 +65,10 @@ import org.apache.spark.SparkEnv
   * so pass-1's unsorted per-partition totals are bit-identical to the
   * old window's ordered sums — the reason a float v is REJECTED at
   * construction rather than silently reassociated.
+  *
+  * SQLMetrics: `carryEntries` (entries pass 1 collected), `pass1Time`
+  * (pass-1 job plus the driver's carry fold), and the pass-2 sorter's
+  * `spillSize` and `peakMemory`.
   */
 case class PrefixSumNode(
     partAttrs: Seq[Attribute],
@@ -116,12 +125,19 @@ case class PrefixSumExec(
   // downstream sorts on a prefix of it are elided
   override def outputOrdering: Seq[SortOrder] = fullOrder
 
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "carryEntries" -> SQLMetrics.createMetric(sparkContext, "carry entries"),
+    "pass1Time" -> SQLMetrics.createTimingMetric(sparkContext, "pass-1 time"),
+    "spillSize" -> SQLMetrics.createSizeMetric(sparkContext, "spill size"),
+    "peakMemory" -> SQLMetrics.createSizeMetric(sparkContext, "peak memory"))
+
   override protected def doExecute(): RDD[InternalRow] = {
     val childRDD = child.execute()
     val childOutput = child.output
     val parts = partAttrs
     val vOrd = childOutput.indexWhere(_.exprId == vAttr.exprId)
     require(vOrd >= 0, "PrefixSumExec: v column not found in child output")
+    val pass1Start = System.nanoTime()
 
     // ---- pass 1: per-(partition, part-key) totals (tiny) ----
     // (sum-or-max of non-null v, whether any non-null v, row count),
@@ -137,7 +153,12 @@ case class PrefixSumExec(
         iter.foreach { row =>
           val k = keyProj(row)
           var acc = m.get(k)
-          if (acc == null) { acc = Array(0L, 0L, 0L); m.put(k.copy(), acc) }
+          if (acc == null) {
+            if (m.size >= PrefixSumExec.MaxCarryEntries)
+              throw PrefixSumExec.carryOverflow(m.size + 1L, parts,
+                s" in partition $pid alone (counting stopped there)")
+            acc = Array(0L, 0L, 0L); m.put(k.copy(), acc)
+          }
           if (!row.isNullAt(vOrd)) {
             val v = row.getLong(vOrd)
             if (maxMode) {
@@ -157,6 +178,9 @@ case class PrefixSumExec(
         }
         Iterator.single((pid, out))
       }.collect()
+    val nEntries = perPid.map(_._2.length.toLong).sum
+    if (nEntries > PrefixSumExec.MaxCarryEntries)
+      throw PrefixSumExec.carryOverflow(nEntries, parts, "")
 
     // ---- driver: carries and global totals ----
     // running[key] = (sum, hasNonNull, count) accumulated over
@@ -190,6 +214,11 @@ case class PrefixSumExec(
     // global total per key: (sum or null, from the finished running map)
     val totalByKey = new java.util.HashMap[UnsafeRow, Array[Long]]()
     running.forEach((k, v) => totalByKey.put(k, v))
+    longMetric("carryEntries") += nEntries
+    longMetric("pass1Time") += (System.nanoTime() - pass1Start) / 1000000L
+    SQLMetrics.postDriverMetricUpdates(sparkContext,
+      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY),
+      Seq(longMetric("carryEntries"), longMetric("pass1Time")))
 
     val needTotal = totalAttr.isDefined
     val needRk = rkAttr.isDefined
@@ -201,12 +230,20 @@ case class PrefixSumExec(
     val extraAttrs = Seq(cumAttr) ++ rkAttr ++ totalAttr
     val inclusiveMode = inclusive
     val radixEnabled = session.sessionState.conf.enableRadixSort
+    val spillSize = longMetric("spillSize")
+    val peakMemory = longMetric("peakMemory")
 
     // ---- pass 2: sort within partition, stream with carry ----
     childRDD.mapPartitionsWithIndex { (pid, iter) =>
       val sorter = PrefixSumExec.createSorter(
         sortOrderLocal, childOutput, radixEnabled)
+      // sort() consumes the whole input before it returns, so the
+      // sorter's peak and the task's spill growth are final here
+      val taskMetrics = TaskContext.get().taskMetrics()
+      val spillBefore = taskMetrics.memoryBytesSpilled
       val sorted = sorter.sort(iter.asInstanceOf[Iterator[UnsafeRow]])
+      peakMemory += sorter.getPeakMemoryUsage
+      spillSize += taskMetrics.memoryBytesSpilled - spillBefore
       val keyProj = UnsafeProjection.create(parts, childOutput)
       val outProj = UnsafeProjection.create(outAttrs, childOutput ++ extraAttrs)
       val joined = new JoinedRow
@@ -275,6 +312,26 @@ case class PrefixSumExec(
 }
 
 object PrefixSumExec {
+  /** The most (partition, part key) entries pass 1 may collect to the
+    * driver. An empty or categorical part needs at most one entry per
+    * range partition and key (20 at sf0.1 and on the 10x probe, 32
+    * shuffle partitions). q247 keys its carry on graph node ids, which
+    * grow with the data: 21003 entries at sf0.1 and 210004 on the 10x
+    * probe (`carryEntries` over every execution, checkpoint jobs
+    * included). Past this limit, about 5x the largest measured carry,
+    * the query fails instead of swamping the driver's carry maps and
+    * every task's broadcast.
+    */
+  val MaxCarryEntries: Int = 1000000
+
+  private[plans] def carryOverflow(
+      entries: Long, parts: Seq[Attribute], where: String): IllegalStateException =
+    new IllegalStateException(
+      s"PrefixSumExec: pass 1 collected $entries carry entries$where for part columns " +
+        s"[${parts.map(_.name).mkString(", ")}], above the limit of $MaxCarryEntries " +
+        "(one entry per partition and part key): the part columns have too many " +
+        "distinct values for a driver-side carry")
+
   /** The sorter `SortExec.createSorter` builds, reconstructed for use
     * inside a custom operator's partition function: spillable,
     * radix/prefix-accelerated where the leading key allows.

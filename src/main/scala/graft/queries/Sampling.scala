@@ -226,14 +226,12 @@ object Sampling {
   // after it).
   //
   // Scale shape: the cumulative sum is NOT a per-source sort window
-  // (that serializes each source onto one task — the straggler the
-  // reference watermarker fix removed from assignTimestamps). Instead
-  // the corpus range-partitions on (source, quality desc, doc_id),
-  // each partition computes its local running sum, and a
-  // ≤ partitions × sources row carry frame (cluster-sized, not
-  // data-sized) broadcasts the per-partition offsets back — the q44 /
-  // assignTimestamps distributed-prefix pattern. Billion-doc sources
-  // spread over every executor.
+  // (that serializes each source onto one task). Instead it runs
+  // through `ops.PrefixSum`: the corpus range-partitions on (source,
+  // quality desc, doc_id), each partition computes its local running
+  // sum, and a ≤ partitions × sources entry carry frame (cluster-sized,
+  // not data-sized) broadcasts the per-partition offsets back.
+  // Billion-doc sources spread over every executor.
   /** (doc_id, source, n_toks, quality) with the q52-core quality score
     * — the scored frame both budget consumers (q98, q100) cut from.
     */

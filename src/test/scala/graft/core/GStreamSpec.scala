@@ -105,9 +105,9 @@ class GStreamSpec extends SparkSpec {
 
   // Scale shape of the watermarker: the data path must range-partition
   // on seq, never funnel through one partition (the old coalesce(1)
-  // prefix-max). The only single-partition stage allowed is the carry
-  // window over the per-partition max aggregate — O(#partitions) rows,
-  // bounded by cluster size, not data (the q44 ntile pattern).
+  // prefix-max). No single-partition stage is needed: the carry is
+  // PrefixSumExec's pass-1 job, one max per range partition, folded on
+  // the driver.
   test("assignTimestamps plans distributed: no coalesce(1) on the data path") {
     val st = GStream.fromSeq(spark, (1 to 100).map(_.toString))
       .assignTimestamps(v => (v.toLong, v.toLong - 5))
@@ -115,6 +115,29 @@ class GStreamSpec extends SparkSpec {
     assert(!plan.contains("Coalesce 1"), s"data path funnels through coalesce(1):\n$plan")
     assert(plan.contains("rangepartitioning(seq"),
       s"expected a range exchange on seq:\n$plan")
+  }
+
+  // The watermark is ONE PrefixSumExec over ONE range exchange: a
+  // second, separately sampled exchange would take the carry across
+  // other partition bounds than those of the rows it is added to.
+  test("assignTimestamps plans one range exchange and one PrefixSumExec") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val st = GStream.fromSeq(spark, (1 to 2000).map(_.toString))
+      .assignTimestamps(v => (v.toLong, v.toLong - 5))
+    st.collect() // the final (post-AQE) plan is the one asserted on
+    val plan = st.queryExecution.executedPlan
+    val nodes = new AdaptiveSparkPlanHelper {}.collect(plan) { case p => p }
+    val rangeOnSeq = nodes.collect {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }.collect { case r: RangePartitioning if r.ordering.head.child.references.exists(_.name == "seq") => r }
+    assert(rangeOnSeq.size == 1, s"expected one range exchange on seq:\n$plan")
+    assert(nodes.count(_.isInstanceOf[graft.plans.PrefixSumExec]) == 1, plan.toString)
+    assert(!nodes.exists(_.isInstanceOf[WindowExec]), s"window leaked:\n$plan")
+    assert(!nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]), s"carry join leaked:\n$plan")
   }
 
   // Distributed prefix-max still equals the sequential fold exactly,
@@ -128,6 +151,27 @@ class GStreamSpec extends SparkSpec {
       .collect().toSeq.sortBy(_.seq).map(_.wm)
     val want = wms.scanLeft(Long.MinValue)(math.max).drop(1)
     assert(got == want)
+  }
+
+  // Results must not depend on parallelism or AQE: the same watermark
+  // under 1, 4 and 13 range partitions, with adaptive execution on and
+  // off (AQE coalesces the range exchange, which moves the partition
+  // boundaries the carry is taken across).
+  test("assignTimestamps watermark is invariant to shuffle partitions and AQE") {
+    val rnd = new scala.util.Random(11)
+    // a rising trend with frequent regressions below the running max
+    val wms = (0 until 20000).map(i => i * 10L - rnd.nextLong(5000))
+    val want = wms.scanLeft(Long.MinValue)(math.max).drop(1)
+    for (n <- Seq(1, 4, 13); aqe <- Seq(true, false)) {
+      val got = withConf(
+          "spark.sql.shuffle.partitions" -> n.toString,
+          "spark.sql.adaptive.enabled" -> aqe.toString) {
+        GStream.fromSeq(spark, wms)
+          .assignTimestamps(v => (v, v))
+          .collect().toSeq.sortBy(_.seq).map(_.wm)
+      }
+      assert(got == want, s"shuffle.partitions=$n, AQE=$aqe")
+    }
   }
 
   // The bounded-memory contract: one key owning ALL records must stream

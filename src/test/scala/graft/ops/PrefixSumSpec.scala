@@ -65,6 +65,21 @@ class PrefixSumSpec extends SparkSpec {
     assert(exchanges == 1, s"expected 1 Exchange, got $exchanges:\n$plan")
   }
 
+  test("SQLMetrics: carry entries, pass-1 time and the pass-2 sorter") {
+    val df = (1 to 3000).map(i => ("p" + (i % 3), (i * 7 % 3001).toLong, 1L))
+      .toDF("part", "ord", "v")
+    val out = PrefixSum.prefixSum(df, Seq("part"), Seq(col("ord")), col("v"))
+    out.collect()
+    val exec = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(out.queryExecution.executedPlan) { case p: graft.plans.PrefixSumExec => p }
+      .head
+    val m = exec.metrics.map { case (k, v) => k -> v.value }
+    // one entry per (range partition, part key) holding rows: at least
+    // one per part, at most one per part and partition
+    assert(m("carryEntries") >= 3 && m("carryEntries") <= 3L * 4, m)
+    assert(m("pass1Time") >= 0 && m("spillSize") == 0 && m("peakMemory") > 0, m)
+  }
+
   test("totals column equals the per-part SUM over the whole group") {
     val rows = (1 to 300).map(i =>
       (if (i % 5 == 0) "a" else if (i % 5 == 1) "b" else "c",
@@ -133,6 +148,56 @@ class PrefixSumSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(2)) ->
         (if (r.isNullAt(4)) null else r.getLong(4))).toMap
     assert(got == want)
+  }
+
+  test("prefixMax ≡ MAX over ROWS UNBOUNDED PRECEDING..CURRENT ROW") {
+    // regressing values (a running max that plateaus, then is beaten),
+    // NULLs, and more range partitions than the session default; with
+    // an empty part the carry crosses every partition boundary
+    val rows = (1 to 600).map(i =>
+      (if (i % 3 == 0) "a" else "b", (i * 53 % 601).toLong,
+        (if (i % 17 == 0) null else java.lang.Long.valueOf((i * 37 % 89) - 40L + i / 10))))
+    val df = rows.toDF("part", "ord", "v")
+    def byRow(out: org.apache.spark.sql.DataFrame) = out
+      .select(col("ord"), col("cum")).collect()
+      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getLong(1))).toMap
+    withConf("spark.sql.shuffle.partitions" -> "7") {
+      for (part <- Seq(Seq.empty[String], Seq("part"))) {
+        val got = byRow(PrefixSum.prefixMax(df, part, Seq(col("ord")), col("v")))
+        val w = Window.partitionBy(part.map(col): _*).orderBy(col("ord"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        val want = byRow(df.withColumn("cum", max(col("v")).over(w)))
+        assert(got == want, s"part = $part")
+      }
+    }
+  }
+
+  test("a data-sized part fails fast: the carry-entry limit names count and columns") {
+    // one part key per row: the carry frame grows with the data, which
+    // the operator's contract forbids. With four range partitions the
+    // driver-side count trips; with one, the per-partition count does
+    // (AQE off: it would coalesce the four into one).
+    import graft.plans.PrefixSumExec.MaxCarryEntries
+    val n = MaxCarryEntries + 1000L
+    // negated ids: Range's own range partitioning must not stand in for
+    // the operator's exchange
+    val df = spark.range(n).select(-col("id") as "user", -col("id") as "ord", lit(1L) as "v")
+    def failure(partitions: Int): String = withConf(
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> partitions.toString) {
+      val e = intercept[Exception] {
+        PrefixSum.prefixSum(df, Seq("user"), Seq(col("ord")), col("v")).collect()
+      }
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case i: IllegalStateException => i.getMessage }
+        .getOrElse(throw e)
+    }
+    val all = failure(4)
+    assert(all.contains(s"collected $n carry entries for part columns [user]"), all)
+    assert(all.contains(s"limit of $MaxCarryEntries"), all)
+    val one = failure(1)
+    assert(one.contains(s"${MaxCarryEntries + 1L} carry entries in partition 0 alone"), one)
+    assert(one.contains("[user]"), one)
   }
 
   test("rankAndSum ≡ chained rank + prefix sum, in one pass") {

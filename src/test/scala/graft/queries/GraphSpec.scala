@@ -104,4 +104,45 @@ class GraphSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got == Map(1L -> 0L, 2L -> 30L, 4L -> 60L, 5L -> 65L), s"got $got")
   }
+
+  test("q247's adjacency index: one carry entry per src, fails fast past the limit") {
+    // q247 ranks each node's adjacency with a src-keyed carry, so pass 1
+    // collects about one entry per distinct src (node ids grow with the
+    // data): ~21k at sf0.1 and ~211k on the 10x probe. That must run;
+    // past PrefixSumExec.MaxCarryEntries the query fails by name.
+    import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
+    import graft.plans.PrefixSumExec.MaxCarryEntries
+    def edges(nSrc: Long) = {
+      val e0 = spark.range(nSrc)
+        .select((col("id") * 2).as("src"), (col("id") % 1000 * 2 + 1).as("dst"))
+      e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
+    }
+    def adj(nSrc: Long) = Sampling.rankDistributed(edges(nSrc), Seq("src"), Seq(col("dst")))
+
+    val nSrc = 210000L
+    val ranked = adj(nSrc)
+    // every src's ranks are exactly 1..deg
+    val bad = ranked.groupBy(col("src"))
+      .agg(count(lit(1)).as("n"), min(col("rk")).as("lo"), max(col("rk")).as("hi"),
+        sum(col("rk")).as("s"))
+      .filter(col("lo") =!= 1L || col("hi") =!= col("n") ||
+        col("s") =!= col("n") * (col("n") + 1L) / 2L)
+      .count()
+    assert(bad == 0L)
+    ranked.queryExecution.toRdd.count()
+    val exec = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(ranked.queryExecution.executedPlan) { case p: graft.plans.PrefixSumExec => p }
+      .head
+    val distinctSrc = nSrc + 1000L
+    val entries = exec.metrics("carryEntries").value
+    assert(entries >= distinctSrc && entries < distinctSrc + 64, entries)
+    assert(distinctSrc * 4 < MaxCarryEntries, "the 10x probe's q247 carry needs headroom")
+
+    val e = intercept[Exception](adj(MaxCarryEntries.toLong).count())
+    val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case i: IllegalStateException => i.getMessage }
+      .getOrElse(throw e)
+    assert(msg.contains("carry entries") && msg.contains("[src]"), msg)
+    assert(msg.contains(s"limit of $MaxCarryEntries"), msg)
+  }
 }
