@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print formatted physical plans for the named queries (or a
   * default set) so pushdown/pruning/broadcast/codegen can be inspected.
   * Usage: runMain graft.Explain [sfDir] [q1,q2,...|--audit]
@@ -56,14 +54,8 @@ object Explain {
         .getOrElse(if (audit) SparkEntry.queries.keys.toSeq.sorted
         else Seq("q01_pricing_summary", "q02_filter_project", "q03_top_revenue",
           "q05_star_join", "q06_filter_agg", "q26_tumbling_window", "q32_minhash_lsh"))
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // pinned to 4 cores: PLAN_FPS.tsv hashes 4-partition plans
+    val spark = Session.local(4)
     if (fpOut.isDefined) {
       val out = new java.io.PrintWriter(fpOut.get, "UTF-8")
       names.foreach { n =>

@@ -936,8 +936,7 @@ object Graph {
     * every round's state comes out of groupBy(v) hash-partitioned on v,
     * so the v = src equi-join reuses both sides' partitioning: zero
     * exchanges on the join, exactly ONE (partial-agg-reduced) shuffle
-    * per round. Split out (with [[hbInit]]/[[hbMerge]]/[[hbSummary]])
-    * so `graft.HbProfile` can time each phase in isolation.
+    * per round.
     */
   private[graft] def hbEdges(s: SparkSession, d: String): DataFrame = {
     val e0 = lineitem(s, d)
