@@ -42,8 +42,11 @@ object FixedWindows {
 }
 
 /** Per-key window state: open windows by start + the monotone watermark.
-  * Drives both the batch parity operator (sorted flatMapGroups) and the
-  * streaming one (flatMapGroupsWithState) — see graft.streaming.
+  * Drives both the batch parity operator (WindowedOps.windowedAggregate,
+  * sorted flatMapGroups) and the streaming one
+  * (graft.streaming.StatefulStreams.windowedParity, a step on the one
+  * streaming keyed fold StatefulStreams.statefulByKey that restores the
+  * manager from its GroupState snapshot per record).
   */
 final class FixedWindowManager[S](size: Long, slide: Long, init: () => S) {
   private val open = mutable.Map.empty[Long, S]

@@ -216,7 +216,10 @@ final class KeyedGStream[K, T](val ds: Dataset[(K, (Long, T))]) {
     * node.go:66-105): per-key state threaded through the key's records
     * in arrival order, 0..N outputs per record, one state per key (the
     * reference clones the node per key — engine.go:239-244). Streaming
-    * form: graft.streaming.StatefulStreams.statefulByKey.
+    * form: graft.streaming.StatefulStreams.statefulByKey, the one
+    * GroupState fold every per-key streaming twin runs on; its
+    * `arrival` ordering stands in for the `seq` sort within a
+    * micro-batch.
     *
     * Memory is bounded per RECORD, not per key: instead of buffering a
     * key's records to sort them (flatMapGroups + in-memory sort — a

@@ -12,8 +12,10 @@ import org.apache.spark.sql.{Dataset, Encoder}
   * the operator-level monotone watermark (`GStream.assignTimestamps`),
   * which is exactly the per-key view of the reference's per-key window
   * manager clones (engine.go:239-261 + window.go:161-177). One shuffle
-  * on the key; state lives per key inside the group iterator, so the
-  * operator scales with the number of keys, not records.
+  * on the key. Each key's whole group is buffered and sorted in memory
+  * (`it.toIndexedSeq.sortBy(_.seq)`), so a task holds its largest
+  * key's records at once: memory grows with the records of the hottest
+  * key, and a key too large for one task's heap fails the task.
   */
 object WindowedOps {
 

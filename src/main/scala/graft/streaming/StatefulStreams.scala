@@ -12,58 +12,110 @@ import graft.core.{FixedWindowManager, Stamped}
   * empty initial state), so one operator body serves both modes — the
   * reference's bounded/unbounded stream split (datastream.go:15-57)
   * collapses into the Dataset abstraction.
+  *
+  * Every per-key fold here is one call of [[statefulByKey]]: a key
+  * selector, an in-batch arrival order and a per-record step. Four
+  * GroupState twins are not per-record folds and keep their own
+  * operator body: `streamingSkyline` and `streamingPrioritySample`
+  * pre-fold each partition before one global key and merge whole
+  * candidate sets into state; `streamingPeakConcurrency` and
+  * `streamingSprtMonitor` emit once per batch from the final state,
+  * not once per record. The `transformWithState` dedups, the native
+  * aggregations and the DP release hold no user-written fold at all.
   */
 object StatefulStreams {
 
-  /** O3 (reference NewStatefulNode, node.go:66-105): keyed stateful
-    * flatMap over a (possibly streaming) Dataset. Per-key state is a
-    * Spark GroupState — checkpointed, watermark-evictable, RocksDB-
-    * backable at scale — instead of the reference's unbounded in-memory
-    * per-key node clones (engine.go:239-244).
+  // Dataset encoders need no session
+  private object encoders extends org.apache.spark.sql.EncoderImplicits
+  import encoders._
+
+  /** What a key emits when its processing-time flush fires: a key with
+    * no arrivals for `afterMs` calls `emit(key, state, out)` and its
+    * state entry is removed (see [[statefulByKey]]).
+    */
+  final case class Flush[K, S, U](afterMs: Long, emit: (K, S, U => Unit) => Unit)
+
+  /** O3 (reference NewStatefulNode, node.go:66-105): THE keyed stateful
+    * fold over a (possibly streaming) Dataset. Per-key state is a Spark
+    * GroupState — checkpointed, watermark-evictable, RocksDB-backable at
+    * scale — instead of the reference's unbounded in-memory per-key node
+    * clones (engine.go:239-244). `step` is the reference's NodeFunc
+    * (node.go:47): (key, state, record, emit) => state', 0..N outputs
+    * per record appended to one per-batch buffer; a step returning None
+    * removes the key's state entry.
+    *  - `arrival`: the order a key's records fold in within a
+    *    micro-batch (the group is buffered and sorted once); None folds
+    *    the group iterator as it comes.
+    *  - `mode`: the output mode; Append unless emissions revise rows.
+    *  - `flush`: a processing-time timeout (ProcessingTimeTimeout),
+    *    re-armed on every arrival; None runs with NoTimeout.
+    */
+  def statefulByKey[K, T, S, U](ds: Dataset[T])(
+      key: T => K,
+      arrival: Option[Ordering[T]] = None,
+      mode: OutputMode = OutputMode.Append,
+      flush: Option[Flush[K, S, U]] = None)(
+      step: (K, Option[S], T, U => Unit) => Option[S])(
+      implicit ek: Encoder[K], es: Encoder[S], eu: Encoder[U]): Dataset[U] =
+    ds.groupByKey(key)
+      .flatMapGroupsWithState(mode,
+        if (flush.isDefined) GroupStateTimeout.ProcessingTimeTimeout
+        else GroupStateTimeout.NoTimeout) {
+        (k: K, it: Iterator[T], gs: GroupState[S]) =>
+          val out = Vector.newBuilder[U]
+          val emit: U => Unit = out += _
+          if (gs.hasTimedOut) {
+            for (f <- flush; s <- gs.getOption) f.emit(k, s, emit)
+            gs.remove()
+          } else {
+            var st = gs.getOption
+            arrival.fold(it)(ord => it.toIndexedSeq.sorted(ord).iterator)
+              .foreach(v => st = step(k, st, v, emit))
+            st match {
+              case Some(s) =>
+                gs.update(s)
+                flush.foreach(f => gs.setTimeoutDuration(f.afterMs))
+              case None => if (gs.exists) gs.remove()
+            }
+          }
+          out.result().iterator
+      }
+
+  /** [[statefulByKey]] in (state, record) => (state', outputs) form,
+    * every key starting from `init`.
     */
   def statefulByKey[K, T, S, U](
       ds: Dataset[T], key: T => K, init: S)(
       f: (S, T) => (S, Seq[U]))(
       implicit ek: Encoder[K], es: Encoder[S], eu: Encoder[U]): Dataset[U] =
-    ds.groupByKey(key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: K, it: Iterator[T], gs: GroupState[S]) =>
-          var s = gs.getOption.getOrElse(init)
-          val out = Vector.newBuilder[U]
-          it.foreach { v =>
-            val (s2, us) = f(s, v)
-            s = s2
-            out ++= us
-          }
-          gs.update(s)
-          out.result().iterator
-      }
+    statefulByKey(ds)(key) { (_: K, st: Option[S], v: T, emit: U => Unit) =>
+      val (s2, us) = f(st.getOrElse(init), v)
+      us.foreach(emit)
+      Some(s2)
+    }
 
   /** O10 streaming parity mode: ssp-exact windowed aggregation via a
     * per-key FixedWindowManager checkpointed in GroupState. Late
     * records re-open windows (never dropped) and windows close on the
     * record-carried watermark — byte-for-byte the reference's golden
-    * behavior (engine_test.go:616-744), incrementally.
+    * behavior (engine_test.go:616-744), incrementally. Each record
+    * restores the manager from the (watermark, open windows) snapshot,
+    * so a record costs O(open windows) — what `advance` costs anyway.
     */
   def windowedParity[K, T, S](
       ds: Dataset[Stamped[T]], key: T => K, size: Long, slide: Long, init: () => S)(
       add: (S, T) => S)(
       implicit ek: Encoder[K], es: Encoder[(Long, Map[Long, S])],
       eu: Encoder[(K, Long, Long, S)]): Dataset[(K, Long, Long, S)] =
-    ds.groupByKey(r => key(r.value))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (k: K, it: Iterator[Stamped[T]], gs: GroupState[(Long, Map[Long, S])]) =>
-          val mgr = new FixedWindowManager[S](size, slide, init)
-          gs.getOption.foreach { case (wm, snap) => mgr.restore(snap, wm) }
-          val sorted = it.toIndexedSeq.sortBy(_.seq)
-          val out = Vector.newBuilder[(K, Long, Long, S)]
-          sorted.foreach { r =>
-            mgr.add(r.ts)(s => add(s, r.value))
-            mgr.advance(r.wm).foreach(w => out += ((k, w.start, w.stop, w.state)))
-          }
-          gs.update((mgr.watermark, mgr.openSnapshot))
-          out.result().iterator
-      }
+    statefulByKey(ds)(r => key(r.value), arrival = Some(Ordering.by(_.seq))) {
+      (k: K, st: Option[(Long, Map[Long, S])], r: Stamped[T],
+          emit: ((K, Long, Long, S)) => Unit) =>
+        val mgr = new FixedWindowManager[S](size, slide, init)
+        st.foreach { case (wm, snap) => mgr.restore(snap, wm) }
+        mgr.add(r.ts)(s => add(s, r.value))
+        mgr.advance(r.wm).foreach(w => emit((k, w.start, w.stop, w.state)))
+        Some((mgr.watermark, mgr.openSnapshot))
+    }
 
   /** Production streaming windows (the non-parity path): Spark-native
     * watermark + sliding window aggregation — the semantics the
@@ -113,38 +165,32 @@ object StatefulStreams {
     *    re-delivered input does not inflate downstream counts.
     */
   def streamingNearDupPairs(
-      docs: DataFrame, maxPerBucket: Int = 256): Dataset[(Long, Long, Double)] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.queries.Dedup.bandedSignatures(docs)
-      .select(col("band"), col("bkey"), col("doc_id"), col("sig"))
-      .as[(Int, String, Long, Seq[Long])]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: (Int, String), it: Iterator[(Int, String, Long, Seq[Long])],
-            gs: GroupState[List[(Long, Seq[Long])]]) =>
-          var members = gs.getOption.getOrElse(Nil)
-          val out = Vector.newBuilder[(Long, Long, Double)]
-          // doc_id order within the micro-batch for deterministic output
-          it.toIndexedSeq.sortBy(_._3).foreach { case (_, _, id, sig) =>
-            // a replayed/duplicate arrival of a stored member must not
-            // re-emit its pair set (it would inflate downstream counts
-            // relative to the batch form)
-            if (!members.exists(_._1 == id)) {
-              members.foreach { case (mid, msig) =>
-                var eq = 0
-                var i = 0
-                while (i < sig.length) { if (sig(i) == msig(i)) eq += 1; i += 1 }
-                out += ((math.min(id, mid), math.max(id, mid),
-                  eq.toDouble / graft.queries.Dedup.NumHashes))
-              }
-              if (members.lengthCompare(maxPerBucket) < 0) members ::= (id, sig)
-            }
+      docs: DataFrame, maxPerBucket: Int = 256): Dataset[(Long, Long, Double)] =
+    statefulByKey(graft.queries.Dedup.bandedSignatures(docs)
+        .select(col("band"), col("bkey"), col("doc_id"), col("sig"))
+        .as[(Int, String, Long, Seq[Long])])(
+        r => (r._1, r._2),
+        // doc_id order within the micro-batch for deterministic output
+        arrival = Some(Ordering.by(_._3))) {
+      (_: (Int, String), st: Option[List[(Long, Seq[Long])]],
+          r: (Int, String, Long, Seq[Long]), emit: ((Long, Long, Double)) => Unit) =>
+        val members = st.getOrElse(Nil)
+        val id = r._3; val sig = r._4
+        // a replayed/duplicate arrival of a stored member must not
+        // re-emit its pair set (it would inflate downstream counts
+        // relative to the batch form)
+        if (members.exists(_._1 == id)) st
+        else {
+          members.foreach { case (mid, msig) =>
+            var eq = 0
+            var i = 0
+            while (i < sig.length) { if (sig(i) == msig(i)) eq += 1; i += 1 }
+            emit((math.min(id, mid), math.max(id, mid),
+              eq.toDouble / graft.queries.Dedup.NumHashes))
           }
-          gs.update(members)
-          out.result().iterator
-      }
-  }
+          Some(if (members.lengthCompare(maxPerBucket) < 0) (id, sig) :: members else members)
+        }
+    }
 
   /** Incremental winnowing substring near-dup — the streaming form of
     * batch q86 (graft.queries.Dedup.substringNearDupPairs): arriving
@@ -166,32 +212,22 @@ object StatefulStreams {
     * other (neither was stored).
     */
   def streamingSubstringPairs(
-      docs: DataFrame, maxPerBucket: Int = 256): Dataset[(Long, Long)] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.queries.Dedup.substringFingerprints(docs)
-      .select(col("doc_id"), col("h"))
-      .as[(Long, Long)]
-      .groupByKey(_._2)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[(Long, Long)], gs: GroupState[List[Long]]) =>
-          var members = gs.getOption.getOrElse(Nil)
-          val out = Vector.newBuilder[(Long, Long)]
-          it.map(_._1).toIndexedSeq.sorted.foreach { id =>
-            // already-stored ids (replays, duplicate (doc,h) rows) skip
-            // emission entirely — re-emitting would inflate downstream
-            // n_shared counts relative to batch q86
-            if (!members.contains(id)) {
-              members.foreach { mid =>
-                out += ((math.min(id, mid), math.max(id, mid)))
-              }
-              if (members.lengthCompare(maxPerBucket) < 0) members ::= id
-            }
-          }
-          gs.update(members)
-          out.result().iterator
-      }
-  }
+      docs: DataFrame, maxPerBucket: Int = 256): Dataset[(Long, Long)] =
+    statefulByKey(graft.queries.Dedup.substringFingerprints(docs)
+        .select(col("doc_id"), col("h"))
+        .as[(Long, Long)])(_._2, arrival = Some(Ordering.by(_._1))) {
+      (_: Long, st: Option[List[Long]], r: (Long, Long), emit: ((Long, Long)) => Unit) =>
+        val members = st.getOrElse(Nil)
+        val id = r._1
+        // already-stored ids (replays, duplicate (doc,h) rows) skip
+        // emission entirely — re-emitting would inflate downstream
+        // n_shared counts relative to batch q86
+        if (members.contains(id)) st
+        else {
+          members.foreach(mid => emit((math.min(id, mid), math.max(id, mid))))
+          Some(if (members.lengthCompare(maxPerBucket) < 0) id :: members else members)
+        }
+    }
 
   /** Streaming per-source token-budget admission gate — the
     * continuous-ingest sibling of batch q98
@@ -211,27 +247,16 @@ object StatefulStreams {
     */
   def streamingTokenBudget(
       docs: DataFrame,
-      budget: Long = graft.queries.Sampling.TokenBudget): Dataset[(Long, String, Long, Long)] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id"), col("source"),
+      budget: Long = graft.queries.Sampling.TokenBudget): Dataset[(Long, String, Long, Long)] =
+    statefulByKey(docs.select(col("doc_id"), col("source"),
         size(graft.functions.TextFns.tokens(col("text"))).cast("long").as("n_toks"))
-      .as[(Long, String, Long)]
-      .groupByKey(_._2)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, it: Iterator[(Long, String, Long)], gs: GroupState[Long]) =>
-          var used = gs.getOption.getOrElse(0L)
-          val out = Vector.newBuilder[(Long, String, Long, Long)]
-          it.toIndexedSeq.sortBy(_._1).foreach { case (id, src, n) =>
-            if (used < budget) {
-              used += n
-              out += ((id, src, n, used))
-            }
-          }
-          gs.update(used)
-          out.result().iterator
-      }
-  }
+        .as[(Long, String, Long)])(_._2, arrival = Some(Ordering.by(_._1))) {
+      (_: String, st: Option[Long], r: (Long, String, Long),
+          emit: ((Long, String, Long, Long)) => Unit) =>
+        val used = st.getOrElse(0L)
+        if (used >= budget) Some(used)
+        else { emit((r._1, r._2, r._3, used + r._3)); Some(used + r._3) }
+    }
 
   /** Streaming form of batch q147 (graft.queries.EventWindows
     * .latenessAuditOf) — tag each arriving event with the watermark in
@@ -247,25 +272,16 @@ object StatefulStreams {
     */
   def streamingLatenessTags(
       ev: DataFrame,
-      delayMs: Long = graft.queries.EventWindows.LateDelayMs): Dataset[(Long, String, Long, Long, Boolean)] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.select(col("event_id"), col("event_type"), col("ts_ms"))
-      .as[(Long, String, Long)]
-      .groupByKey(_ => 0)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Int, it: Iterator[(Long, String, Long)], gs: GroupState[Long]) =>
-          var maxTs = gs.getOption.getOrElse(Long.MinValue)
-          val out = Vector.newBuilder[(Long, String, Long, Long, Boolean)]
-          it.toIndexedSeq.sortBy(_._1).foreach { case (id, tp, ts) =>
-            val wm = if (maxTs == Long.MinValue) Long.MinValue else maxTs - delayMs
-            out += ((id, tp, ts, wm, wm != Long.MinValue && ts < wm))
-            if (ts > maxTs) maxTs = ts
-          }
-          gs.update(maxTs)
-          out.result().iterator
-      }
-  }
+      delayMs: Long = graft.queries.EventWindows.LateDelayMs): Dataset[(Long, String, Long, Long, Boolean)] =
+    statefulByKey(ev.select(col("event_id"), col("event_type"), col("ts_ms"))
+        .as[(Long, String, Long)])(_ => 0, arrival = Some(Ordering.by(_._1))) {
+      (_: Int, st: Option[Long], r: (Long, String, Long),
+          emit: ((Long, String, Long, Long, Boolean)) => Unit) =>
+        val maxTs = st.getOrElse(Long.MinValue)
+        val wm = if (maxTs == Long.MinValue) Long.MinValue else maxTs - delayMs
+        emit((r._1, r._2, r._3, wm, wm != Long.MinValue && r._3 < wm))
+        Some(maxTs max r._3)
+    }
 
   /** Streaming form of batch q151 (graft.queries.EventWindows
     * .burstsOf) — per-type hourly counts maintained in GroupState with
@@ -284,29 +300,23 @@ object StatefulStreams {
       ev: DataFrame): Dataset[(String, Long, Long, Long, Long, Long)] = {
     val w = graft.queries.EventWindows.BurstWindowHours
     val fp = graft.queries.EventWindows.BurstFp
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.select(col("event_type"), expr("ts_ms div 3600000").as("hr"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (tp: String, it: Iterator[(String, Long)], gs: GroupState[Map[Long, Long]]) =>
-          var counts = gs.getOption.getOrElse(Map.empty[Long, Long])
-          val out = Vector.newBuilder[(String, Long, Long, Long, Long, Long)]
-          it.map(_._2).toIndexedSeq.sorted.foreach { hr =>
-            counts = counts.updated(hr, counts.getOrElse(hr, 0L) + 1L)
-            val trail = counts.filter { case (h, _) => h >= hr - w && h < hr }
-            if (trail.nonEmpty) {
-              val tSum = trail.valuesIterator.sum
-              val cnt = counts(hr)
-              out += ((tp, hr, cnt, tSum, trail.size.toLong, cnt * w * fp / tSum))
-            }
-            val horizon = counts.keysIterator.max - w
-            counts = counts.filter { case (h, _) => h >= horizon }
-          }
-          gs.update(counts)
-          out.result().iterator
-      }
+    statefulByKey(ev.select(col("event_type"), expr("ts_ms div 3600000").as("hr"))
+        .as[(String, Long)])(
+        _._1, arrival = Some(Ordering.by(_._2)), mode = OutputMode.Update) {
+      (tp: String, st: Option[Map[Long, Long]], r: (String, Long),
+          emit: ((String, Long, Long, Long, Long, Long)) => Unit) =>
+        val hr = r._2
+        val prior = st.getOrElse(Map.empty[Long, Long])
+        val counts = prior.updated(hr, prior.getOrElse(hr, 0L) + 1L)
+        val trail = counts.filter { case (h, _) => h >= hr - w && h < hr }
+        if (trail.nonEmpty) {
+          val tSum = trail.valuesIterator.sum
+          val cnt = counts(hr)
+          emit((tp, hr, cnt, tSum, trail.size.toLong, cnt * w * fp / tSum))
+        }
+        val horizon = counts.keysIterator.max - w
+        Some(counts.filter { case (h, _) => h >= horizon })
+    }
   }
 
   /** Streaming form of batch q153 (graft.queries.Frontier.skylineOf) —
@@ -323,8 +333,6 @@ object StatefulStreams {
     * and dominated arrivals leave state untouched and emit nothing.
     */
   def streamingSkyline(pts: DataFrame): Dataset[(Long, Double, Long)] = {
-    val spark = pts.sparkSession
-    import spark.implicits._
     def dominatesOrEq(a: (Double, Long), b: (Double, Long)): Boolean =
       a._1 <= b._1 && a._2 >= b._2
     def insert(sky: List[(Double, Long)],
@@ -363,8 +371,6 @@ object StatefulStreams {
     */
   def streamingPeakConcurrency(ev: DataFrame): Dataset[(String, Long, Long)] = {
     val hold = graft.queries.Frontier.HoldMs
-    val spark = ev.sparkSession
-    import spark.implicits._
     ev.select(col("event_type"), col("ts_ms")).as[(String, Long)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
@@ -417,23 +423,14 @@ object StatefulStreams {
     * (streamingTokenBudget contract); within a micro-batch rows sort
     * by day.
     */
-  def streamingLtvAttribution(ev: DataFrame): Dataset[(Long, Long, Long)] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.select(col("user_id"), col("day"), col("cents"))
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[(Long, Long, Long)], gs: GroupState[Long]) =>
-          var cohort = gs.getOption.getOrElse(Long.MaxValue)
-          val out = it.toIndexedSeq.sortBy(_._2).map { case (_, day, cents) =>
-            if (day < cohort) cohort = day
-            (cohort, day - cohort, cents)
-          }
-          gs.update(cohort)
-          out.iterator
-      }
-  }
+  def streamingLtvAttribution(ev: DataFrame): Dataset[(Long, Long, Long)] =
+    statefulByKey(ev.select(col("user_id"), col("day"), col("cents"))
+        .as[(Long, Long, Long)])(_._1, arrival = Some(Ordering.by(_._2))) {
+      (_: Long, st: Option[Long], r: (Long, Long, Long), emit: ((Long, Long, Long)) => Unit) =>
+        val cohort = st.getOrElse(Long.MaxValue) min r._2
+        emit((cohort, r._2 - cohort, r._3))
+        Some(cohort)
+    }
 
   /** Streaming form of batch q168 (graft.queries.EventWindows
     * .transitionMatrixOf) — Markov transitions emitted ON ARRIVAL:
@@ -449,27 +446,13 @@ object StatefulStreams {
     */
   def streamingTransitions(ev: DataFrame): Dataset[(String, String)] = {
     val gapMs = 1800000L
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.select(col("user_id"), col("event_id"), col("event_type"), col("ts_ms"))
-      .as[(Long, Long, String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[(Long, Long, String, Long)],
-            gs: GroupState[(String, Long)]) =>
-          var prev = gs.getOption
-          val out = Vector.newBuilder[(String, String)]
-          it.toIndexedSeq.sortBy(t => (t._4, t._2)).foreach {
-            case (_, _, tp, ts) =>
-              prev match {
-                case Some((pt, pts)) if ts - pts <= gapMs => out += ((pt, tp))
-                case _ => ()
-              }
-              prev = Some((tp, ts))
-          }
-          prev.foreach(gs.update)
-          out.result().iterator
-      }
+    statefulByKey(ev.select(col("user_id"), col("event_id"), col("event_type"), col("ts_ms"))
+        .as[(Long, Long, String, Long)])(_._1, arrival = Some(Ordering.by(t => (t._4, t._2)))) {
+      (_: Long, prev: Option[(String, Long)], r: (Long, Long, String, Long),
+          emit: ((String, String)) => Unit) =>
+        prev.foreach { case (pt, pts) => if (r._4 - pts <= gapMs) emit((pt, r._3)) }
+        Some((r._3, r._4))
+    }
   }
 
   /** Streaming form of batch q138 (graft.queries.Sampling
@@ -495,8 +478,6 @@ object StatefulStreams {
     */
   def streamingPrioritySample(
       docs: DataFrame, k: Int): Dataset[(Long, Long, Double, Double)] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val pri = docs.select(col("doc_id"),
         greatest(col("n_chars"), lit(1L)).as("w"),
         (greatest(col("n_chars"), lit(1L)).cast("double") *
@@ -540,30 +521,21 @@ object StatefulStreams {
     * q126, so the parity spec compares them row-for-row.
     */
   def streamingTurnPairs(
-      ev: DataFrame, gapMs: Long = 1800000L): Dataset[(Long, Long, Long, Long, Long)] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.select(col("user_id"), col("ts_ms"), col("event_id"), col("event_type"))
-      .as[(Long, Long, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        // state: (lastTs, lastType, lastId, nSessions); nSessions == 0
-        // means no event seen yet
-        (user: Long, it: Iterator[(Long, Long, Long, String)],
-            gs: GroupState[(Long, String, Long, Long)]) =>
-          var st = gs.getOption.getOrElse((Long.MinValue, "", 0L, 0L))
-          val out = Vector.newBuilder[(Long, Long, Long, Long, Long)]
-          it.toIndexedSeq.sortBy(e => (e._2, e._3)).foreach { case (_, ts, id, typ) =>
-            val newSession = st._4 == 0L || ts - st._1 > gapMs
-            val sess = if (newSession) st._4 + 1 else st._4
-            if (!newSession && st._2 == "view" && typ == "click")
-              out += ((user, sess, st._3, id, ts - st._1))
-            st = (ts, typ, id, sess)
-          }
-          gs.update(st)
-          out.result().iterator
-      }
-  }
+      ev: DataFrame, gapMs: Long = 1800000L): Dataset[(Long, Long, Long, Long, Long)] =
+    statefulByKey(ev.select(col("user_id"), col("ts_ms"), col("event_id"), col("event_type"))
+        .as[(Long, Long, Long, String)])(_._1, arrival = Some(Ordering.by(e => (e._2, e._3)))) {
+      // state: (lastTs, lastType, lastId, nSessions); nSessions == 0
+      // means no event seen yet
+      (user: Long, prev: Option[(Long, String, Long, Long)], r: (Long, Long, Long, String),
+          emit: ((Long, Long, Long, Long, Long)) => Unit) =>
+        val st = prev.getOrElse((Long.MinValue, "", 0L, 0L))
+        val (_, ts, id, typ) = r
+        val newSession = st._4 == 0L || ts - st._1 > gapMs
+        val sess = if (newSession) st._4 + 1 else st._4
+        if (!newSession && st._2 == "view" && typ == "click")
+          emit((user, sess, st._3, id, ts - st._1))
+        Some((ts, typ, id, sess))
+    }
 
   /** Streaming IVF ingest: arriving embedding vectors are assigned to
     * their max-cosine cell of a STATIC codebook — the ingest half of
@@ -774,24 +746,13 @@ object StatefulStreams {
     * emissions by log2 delta reproduces batch q185's spectrum exactly
     * (StreamingSeasonalitySpec pins it).
     */
-  def streamingInterarrival(ev: DataFrame): Dataset[(Long, Long)] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.select(col("user_id"), col("event_id"), col("ts_ms"))
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[(Long, Long, Long)], gs: GroupState[Long]) =>
-          var prev = gs.getOption
-          val out = Vector.newBuilder[(Long, Long)]
-          it.toIndexedSeq.sortBy(t => (t._3, t._2)).foreach { case (_, _, ts) =>
-            prev.foreach(pts => out += ((user, ts - pts)))
-            prev = Some(ts)
-          }
-          prev.foreach(gs.update)
-          out.result().iterator
-      }
-  }
+  def streamingInterarrival(ev: DataFrame): Dataset[(Long, Long)] =
+    statefulByKey(ev.select(col("user_id"), col("event_id"), col("ts_ms"))
+        .as[(Long, Long, Long)])(_._1, arrival = Some(Ordering.by(t => (t._3, t._2)))) {
+      (user: Long, prev: Option[Long], r: (Long, Long, Long), emit: ((Long, Long)) => Unit) =>
+        prev.foreach(pts => emit((user, r._3 - pts)))
+        Some(r._3)
+    }
 
   /** Streaming form of batch q191's interval construction — CLOSED
     * validity intervals emitted on arrival: per-user state is the
@@ -804,25 +765,14 @@ object StatefulStreams {
     * is the part both sides define identically). In-order arrival per
     * user; within a micro-batch rows sort by (ts_ms, event_id).
     */
-  def streamingIntervals(ev: DataFrame): Dataset[(String, Long)] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.select(col("user_id"), col("event_id"), col("event_type"), col("ts_ms"))
-      .as[(Long, Long, String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[(Long, Long, String, Long)],
-            gs: GroupState[(String, Long)]) =>
-          var cur = gs.getOption
-          val out = Vector.newBuilder[(String, Long)]
-          it.toIndexedSeq.sortBy(t => (t._4, t._2)).foreach { case (_, _, tp, ts) =>
-            cur.foreach { case (pt, pts) => out += ((pt, ts - pts)) }
-            cur = Some((tp, ts))
-          }
-          cur.foreach(gs.update)
-          out.result().iterator
-      }
-  }
+  def streamingIntervals(ev: DataFrame): Dataset[(String, Long)] =
+    statefulByKey(ev.select(col("user_id"), col("event_id"), col("event_type"), col("ts_ms"))
+        .as[(Long, Long, String, Long)])(_._1, arrival = Some(Ordering.by(t => (t._4, t._2)))) {
+      (_: Long, cur: Option[(String, Long)], r: (Long, Long, String, Long),
+          emit: ((String, Long)) => Unit) =>
+        cur.foreach { case (pt, pts) => emit((pt, r._4 - pts)) }
+        Some((r._3, r._4))
+    }
 
   /** Streaming form of batch q201's event-pattern scan (CEP): the
     * regex `vc*p` (view, any clicks, purchase, nothing else between)
@@ -839,30 +789,20 @@ object StatefulStreams {
     * StreamingPatternSpec pins per-user match counts to batch q201
     * across arbitrary micro-batch splits.
     */
-  def streamingEventPattern(ev: DataFrame): Dataset[(Long, Long)] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.select(col("user_id"), col("event_id"), col("ts_ms"),
+  def streamingEventPattern(ev: DataFrame): Dataset[(Long, Long)] =
+    statefulByKey(ev.select(col("user_id"), col("event_id"), col("ts_ms"),
         expr("substr(event_type, 1, 1)").as("ch"))
-      .as[(Long, Long, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[(Long, Long, Long, String)],
-            gs: GroupState[Boolean]) =>
-          var pending = gs.getOption.getOrElse(false)
-          val out = Vector.newBuilder[(Long, Long)]
-          it.toIndexedSeq.sortBy(t => (t._3, t._2)).foreach { case (_, _, ts, ch) =>
-            ch match {
-              case "v" => pending = true
-              case "c" => // clicks keep a live prefix alive, arm nothing
-              case "p" => if (pending) { out += ((user, ts)); pending = false }
-              case _   => pending = false
-            }
-          }
-          gs.update(pending)
-          out.result().iterator
-      }
-  }
+        .as[(Long, Long, Long, String)])(_._1, arrival = Some(Ordering.by(t => (t._3, t._2)))) {
+      (user: Long, st: Option[Boolean], r: (Long, Long, Long, String),
+          emit: ((Long, Long)) => Unit) =>
+        val pending = st.getOrElse(false)
+        Some(r._4 match {
+          case "v" => true
+          case "c" => pending // clicks keep a live prefix alive, arm nothing
+          case "p" => if (pending) emit((user, r._3)); false
+          case _   => false
+        })
+    }
 
   /** Streaming form of batch q220's pair generation — co-occurrence
     * pairs emitted ON ARRIVAL: per-order state is the distinct part
@@ -874,28 +814,18 @@ object StatefulStreams {
     * across micro-batches. Append mode — pairs are facts; summing
     * downstream reproduces batch q220's support counts exactly
     * (StreamingBasketSpec pins it). Duplicate part arrivals within an
-    * order are ignored, matching the batch DISTINCT.
+    * order are ignored, matching the batch DISTINCT; within a
+    * micro-batch parts fold in part-key order.
     */
-  def streamingBasketPairs(li: DataFrame): Dataset[(Long, Long)] = {
-    val spark = li.sparkSession
-    import spark.implicits._
-    li.select(col("l_orderkey"), col("l_partkey"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[(Long, Long)], gs: GroupState[Seq[Long]]) =>
-          var seen = gs.getOption.getOrElse(Seq.empty[Long])
-          val out = Vector.newBuilder[(Long, Long)]
-          it.foreach { case (_, p) =>
-            if (!seen.contains(p)) {
-              seen.foreach(q => out += ((math.min(p, q), math.max(p, q))))
-              seen = seen :+ p
-            }
-          }
-          gs.update(seen)
-          out.result().iterator
-      }
-  }
+  def streamingBasketPairs(li: DataFrame): Dataset[(Long, Long)] =
+    statefulByKey(li.select(col("l_orderkey"), col("l_partkey"))
+        .as[(Long, Long)])(_._1, arrival = Some(Ordering.by(_._2))) {
+      (_: Long, st: Option[Seq[Long]], r: (Long, Long), emit: ((Long, Long)) => Unit) =>
+        val seen = st.getOrElse(Seq.empty[Long])
+        val p = r._2
+        if (seen.contains(p)) st
+        else { seen.foreach(q => emit((math.min(p, q), math.max(p, q)))); Some(seen :+ p) }
+    }
 
   /** Streaming form of batch q253's run accounting — the page-level
     * run tracking a columnar writer does ON ARRIVAL, sharded by
@@ -913,30 +843,20 @@ object StatefulStreams {
     * sort by event_id. StreamingEncodingSpec pins per-column run
     * counts to the batch window arithmetic over the same rows.
     */
-  def streamingEncodingRuns(ev: DataFrame): Dataset[(String, Long)] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.select(col("event_id"), col("event_type"), col("user_id"),
+  def streamingEncodingRuns(ev: DataFrame): Dataset[(String, Long)] =
+    statefulByKey(ev.select(col("event_id"), col("event_type"), col("user_id"),
         col("ts_ms"), col("vc"))
-      .as[(Long, String, Long, Long, Long)]
-      .groupByKey(_._1 >> 10)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[(Long, String, Long, Long, Long)],
-            gs: GroupState[(Long, String, Long, Long, Long)]) =>
-          var prev = gs.getOption
-          val out = Vector.newBuilder[(String, Long)]
-          it.toIndexedSeq.sortBy(_._1).foreach { case r @ (id, et, uid, ts, vc) =>
-            val chained = prev.filter(_._1 == id - 1)
-            if (!chained.exists(_._2 == et)) out += (("event_type", id))
-            if (!chained.exists(_._3 == uid)) out += (("user_id", id))
-            if (!chained.exists(_._4 == ts)) out += (("ts_ms", id))
-            if (!chained.exists(_._5 == vc)) out += (("value_cents", id))
-            prev = Some(r)
-          }
-          prev.foreach(gs.update)
-          out.result().iterator
-      }
-  }
+        .as[(Long, String, Long, Long, Long)])(_._1 >> 10, arrival = Some(Ordering.by(_._1))) {
+      (_: Long, prev: Option[(Long, String, Long, Long, Long)],
+          r: (Long, String, Long, Long, Long), emit: ((String, Long)) => Unit) =>
+        val (id, et, uid, ts, vc) = r
+        val chained = prev.filter(_._1 == id - 1)
+        if (!chained.exists(_._2 == et)) emit(("event_type", id))
+        if (!chained.exists(_._3 == uid)) emit(("user_id", id))
+        if (!chained.exists(_._4 == ts)) emit(("ts_ms", id))
+        if (!chained.exists(_._5 == vc)) emit(("value_cents", id))
+        Some(r)
+    }
 
   /** Live twin of batch q269's path→edge derivation
     * (EventWindows.attributionEdgesOf): absorbing-chain attribution
@@ -977,51 +897,30 @@ object StatefulStreams {
   def streamingAttributionEdges(
       ev: DataFrame,
       flushAfterMs: Option[Long] = Some(AttributionFlushMs)): Dataset[(String, String)] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (flushAfterMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    ev.select(col("user_id"), col("event_id"), col("event_type"), col("ts_ms"))
-      .as[(Long, Long, String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
-        (_: Long, it: Iterator[(Long, Long, String, Long)],
-            gs: GroupState[(Long, String, Boolean)]) =>
-          if (gs.hasTimedOut) {
-            // churned user: emit the final session's NULL terminal if it
-            // never converted, then drop the state entry entirely
-            val out = gs.getOption.collect {
-              case (_, lastKept, false) => (lastKept, "NULL")
-            }
-            gs.remove()
-            out.iterator
-          } else {
-            var st = gs.getOption // (lastTs, lastKeptType, converted)
-            val out = Vector.newBuilder[(String, String)]
-            it.toIndexedSeq.sortBy(t => (t._4, t._2)).foreach { case (_, _, tp, ts) =>
-              val conv = tp == "purchase"
-              val mapped = if (conv) "CONV" else tp
-              st match {
-                case Some((lastTs, lastKept, converted))
-                    if ts - lastTs <= 1800000L =>
-                  if (!converted) {
-                    out += ((lastKept, mapped))
-                    st = Some((ts, if (conv) lastKept else tp, conv))
-                  } else st = Some((lastTs.max(ts), lastKept, converted))
-                case prev => // first event, or gap > 30 min: new session
-                  prev.collect { case (_, lastKept, false) =>
-                    out += ((lastKept, "NULL"))
-                  }
-                  out += (("START", mapped))
-                  st = Some((ts, if (conv) "START" else tp, conv))
-              }
-            }
-            st.foreach(gs.update)
-            flushAfterMs.foreach(gs.setTimeoutDuration)
-            out.result().iterator
-          }
-      }
+    // churned user: emit the final session's NULL terminal if it never
+    // converted; the operator then drops the state entry entirely
+    val churn = (_: Long, st: (Long, String, Boolean), emit: ((String, String)) => Unit) =>
+      if (!st._3) emit((st._2, "NULL"))
+    statefulByKey(ev.select(col("user_id"), col("event_id"), col("event_type"), col("ts_ms"))
+        .as[(Long, Long, String, Long)])(
+        _._1, arrival = Some(Ordering.by(t => (t._4, t._2))),
+        flush = flushAfterMs.map(Flush(_, churn))) {
+      // state: (lastTs, lastKeptType, converted)
+      (_: Long, st: Option[(Long, String, Boolean)], r: (Long, Long, String, Long),
+          emit: ((String, String)) => Unit) =>
+        val tp = r._3; val ts = r._4
+        val conv = tp == "purchase"
+        val mapped = if (conv) "CONV" else tp
+        st match {
+          case Some((lastTs, lastKept, converted)) if ts - lastTs <= 1800000L =>
+            if (converted) Some((lastTs.max(ts), lastKept, converted))
+            else { emit((lastKept, mapped)); Some((ts, if (conv) lastKept else tp, conv)) }
+          case prev => // first event, or gap > 30 min: new session
+            prev.collect { case (_, lastKept, false) => emit((lastKept, "NULL")) }
+            emit(("START", mapped))
+            Some((ts, if (conv) "START" else tp, conv))
+        }
+    }
   }
 
   /** Live twin of batch q264's DP histogram release: the (lang,
@@ -1067,8 +966,6 @@ object StatefulStreams {
   def streamingSprtMonitor(
       trials: DataFrame): Dataset[(Long, Long, Long, Long, String, Long)] = {
     import graft.queries.Sequential._
-    val spark = trials.sparkSession
-    import spark.implicits._
     trials.select(col("arm"), col("enroll_ms"), col("user_id"), col("conv"))
       .as[(Long, Long, Long, Long)]
       .groupByKey(_._1)

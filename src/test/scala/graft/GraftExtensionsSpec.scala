@@ -1,8 +1,29 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 class GraftExtensionsSpec extends SparkSpec {
+
+  test("register adds only absent functions: injected entries stay, a bare session gets all") {
+    val ids = graft.functions.GraftFunctions.builders.map { case (n, _) => FunctionIdentifier(n) }
+    // the shared session is built with the extension, and so is its sibling
+    val extended = spark.newSession()
+    val reg = extended.sessionState.functionRegistry
+    val injected = ids.map(id => reg.lookupFunction(id).get)
+    graft.functions.GraftFunctions.register(extended)
+    ids.zip(injected).foreach { case (id, info) =>
+      assert(reg.lookupFunction(id).exists(_ eq info), s"$id was replaced")
+    }
+    // a session without the extension's functions
+    val bare = spark.newSession()
+    val bareReg = bare.sessionState.functionRegistry
+    ids.foreach(bareReg.dropFunction)
+    assert(!ids.exists(bareReg.functionExists))
+    graft.functions.GraftFunctions.register(bare)
+    assert(ids.forall(bareReg.functionExists))
+    assert(bare.sql("SELECT hash60('graft')").collect().head.getLong(0) > 0)
+  }
 
   test("extensions inject graft functions into a fresh session") {
     // reuse the shared SparkContext; build a sibling session with the

@@ -79,6 +79,52 @@ class StreamingParitySpec extends SparkSpec {
     assert(got.sorted == WindowParityFixture.golden.sorted)
   }
 
+  test("keyed fold: a micro-batch fed in reverse arrival order folds in arrival order") {
+    implicit val sql = spark.sqlContext
+    // each record emits (key, previous seq, seq): any other fold order
+    // changes the output
+    val rows = for (k <- 0L until 3L; s <- 1L to 20L) yield (k, k * 100 + s)
+    def fold(name: String, feed: Seq[(Long, Long)]): Seq[(Long, Long, Long)] = {
+      val in = MemoryStream[(Long, Long)]
+      in.addData(feed) // one micro-batch
+      runToMemorySink(name)(StatefulStreams.statefulByKey(in.toDS())(
+          _._1, arrival = Some(Ordering.by(_._2))) {
+        (k: Long, prev: Option[Long], r: (Long, Long), emit: ((Long, Long, Long)) => Unit) =>
+          emit((k, prev.getOrElse(-1L), r._2))
+          Some(r._2)
+      })
+    }
+    val want = rows.groupBy(_._1).toSeq.flatMap { case (k, rs) =>
+      val seqs = rs.map(_._2).sorted
+      (-1L +: seqs.init).zip(seqs).map { case (p, s) => (k, p, s) }
+    }
+    assert(fold("fold_sorted", rows).sorted == want.sorted)
+    assert(fold("fold_reversed", rows.reverse).sorted == want.sorted)
+  }
+
+  test("keyed fold: a step returning None removes the key's state entry") {
+    implicit val sql = spark.sqlContext
+    val in = MemoryStream[(Long, Boolean)] // (key, close)
+    val out = StatefulStreams.statefulByKey(in.toDS())(_._1) {
+      (k: Long, n: Option[Long], r: (Long, Boolean), emit: ((Long, Long)) => Unit) =>
+        val m = n.getOrElse(0L) + 1
+        if (r._2) { emit((k, m)); None } else Some(m)
+    }
+    val q = out.writeStream.format("memory").queryName("fold_remove")
+      .outputMode("append").start()
+    def stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+    try {
+      in.addData((0L until 5L).map((_, false)))
+      q.processAllAvailable()
+      assert(stateRows == 5L)
+      in.addData((0L until 5L).map((_, true)))
+      q.processAllAvailable()
+      assert(stateRows == 0L)
+      assert(spark.table("fold_remove").as[(Long, Long)].collect().sorted.toSeq ==
+        (0L until 5L).map((_, 2L)))
+    } finally q.stop()
+  }
+
   test("native sliding window counts run on a stream") {
     implicit val sql = spark.sqlContext
     val in = MemoryStream[(java.sql.Timestamp, String)]
